@@ -35,6 +35,16 @@ class EngineConfig:
 
 DEFAULT_CONFIG = EngineConfig()
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, at most 48g: in local mode the driver heap
+    holds every executor too, and a larger heap than the host has gets the
+    JVM killed by the kernel instead of collected."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 48 * 1024)}m"
+
 
 def get_spark(app_name: str = "spark-jsonata", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -53,7 +63,15 @@ def get_spark(app_name: str = "spark-jsonata", cpus: int | None = None) -> Spark
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
+        # Python workers fork from the engine's daemon (worker_daemon.py),
+        # which stops every task re-reading pyspark.zip's directory; the
+        # package root on the workers' path lets them import it from any cwd
+        .config("spark.python.daemon.module", "kafka_connect_jsonata_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "false")
         # progress bars interleave \r-spew with stdout; a driver tail
         # capture of bench.py then truncates its JSON line mid-string

@@ -108,6 +108,10 @@ def embedding_dim(spark: SparkSession, sf_dir: str) -> int:
     dim = _EMB_DIM_CACHE.get(key)
     if dim is None:
         row = load_table(spark, sf_dir, "embeddings").select("embedding").first()
+        if row is None:
+            raise ValueError(
+                f"embeddings table in {sf_dir} is empty; no vector dimension to read"
+            )
         dim = len(row[0])
         if len(_EMB_DIM_CACHE) >= _PLAN_CACHE_MAX:
             _EMB_DIM_CACHE.clear()

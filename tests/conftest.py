@@ -54,7 +54,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
 
 

@@ -1,12 +1,12 @@
 """Per-job wall-clock breakdown of one registry query (guide §1: measure
 first; §7.1: find WHERE the time goes before touching anything).
 
-Runs the query under an event-log-enabled session (same engine settings as
-``get_spark`` otherwise), warms up exactly like bench.py (tables + Python
-workers + one untimed sf0.001 pass), times N ``count()`` runs, then parses
-the Spark event log and prints every job inside the timed window: duration,
-stage count/names (call sites), task counts. The job list is the measurable
-decomposition of a multi-action pipeline query — checkpoint
+Runs the query under the engine's own ``get_spark`` session with the event
+log switched on from outside it, warms up exactly like bench.py (tables +
+Python workers + one untimed sf0.001 pass), times N ``count()`` runs, then
+parses the Spark event log and prints every job inside the timed window:
+duration, stage count/names (call sites), task counts. The job list is the
+measurable decomposition of a multi-action pipeline query — checkpoint
 materializations, probe counts and driver collects each show up as their
 own row.
 
@@ -22,33 +22,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from kafka_connect_jsonata_spark import queries as Q
+from kafka_connect_jsonata_spark.engine import get_spark
 from kafka_connect_jsonata_spark.sources.readers import TABLES, load_table
 
 
-def build_spark(log_dir: str, cpus: int) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+def enable_event_log(log_dir: str) -> None:
+    """Switch Spark's event log on for the session ``get_spark`` builds
+    next: ``--conf`` in the submit arguments become ``spark.*`` JVM system
+    properties, which every new SparkConf reads. Must run before the JVM
+    starts."""
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in conf.items()] + [args]
     )
 
 
@@ -58,10 +50,10 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     log_dir = "/tmp/spark-events"
     os.makedirs(log_dir, exist_ok=True)
-    spark = build_spark(log_dir, cpus)
+    enable_event_log(log_dir)
+    spark = get_spark("profile")
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
     spark.range(32 * 10).repartition(32).mapInPandas(lambda it: it, "id long").count()
